@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 # Mersenne prime 2^61 - 1: modulus for the universal-hash MinHash permutations
@@ -21,15 +21,13 @@ MERSENNE_P = (1 << 61) - 1
 
 @dataclass(frozen=True)
 class DedupConfig:
-    """All knobs of the dedup cascade. Deterministic: every random element
-    (permutation params, hyperplanes) derives from ``seed`` only, so cluster
-    assignments are reproducible across partitionings and parallelism levels
-    (SURVEY.md §7.3 determinism requirement)."""
+    """All knobs of the dedup cascade. Deterministic: the one random element,
+    the MinHash permutation parameters, derives from ``minhash_seed`` only,
+    so cluster assignments are reproducible across partitionings and
+    parallelism levels (SURVEY.md §7.3 determinism requirement)."""
 
     # --- document assembly (BASELINE.json input_hint) ---
     min_doc_chars: int = 10          # reference drops <10 chars (src/loader.py:118-119)
-    max_doc_chars: int = 0           # 0 = no truncation of the assembled doc;
-                                     # per-turn truncation below
     max_turn_chars: int = 2048       # reference truncates passages at 2048 (src/loader.py:114-116)
 
     # --- shingling ---
@@ -106,7 +104,9 @@ class DedupConfig:
     # slim n_shingles count (False). False is the 100TB-scale setting: the
     # persistent signature table shrinks ~10x and the verify stage re-shingles
     # ONLY the stage-1/2 survivor docs from text (functions/signature_udf.py
-    # make_shingles_udf). Results are identical (tested).
+    # make_shingles_udf). Results are identical (tested). Batch only: the
+    # streaming sink keeps no text to re-shingle short indexed docs from, so
+    # IncrementalDedup rejects False.
     store_shingles: bool = True
 
     # --- verification + clustering ---
@@ -119,8 +119,6 @@ class DedupConfig:
     check_id_collisions: bool = True
 
     # --- execution ---
-    seed: int = 42
-    shuffle_partitions: int = 32
     pair_repartition: int = 0        # 0 = leave to AQE; else explicit repartition
                                      # on band keys before the self-join
 

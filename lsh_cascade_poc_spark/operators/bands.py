@@ -63,20 +63,49 @@ def explode_bands(
     )
 
 
+# a band bucket: the key every band join and every bucket count uses
+BUCKET = ["tier", "band_id", "band_key"]
+
+
+def bucket_sizes(bands: DataFrame) -> DataFrame:
+    """(tier, band_id, band_key, n_docs): rows per band bucket."""
+    return bands.groupBy(*BUCKET).agg(F.count(F.lit(1)).alias("n_docs"))
+
+
 def band_index_stats(bands: DataFrame) -> DataFrame:
     """A6: one-row stats of a band/segment index — row count, distinct
     buckets, max/mean bucket size (the reference's get_stats +
     query_with_stats counters, src/cascade_search.py:292-299,
     src/e2lsh.py:321-369, as ONE aggregate instead of per-query dicts)."""
-    per_bucket = bands.groupBy("tier", "band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    return per_bucket.agg(
+    return bucket_sizes(bands).agg(
         F.sum("n_docs").alias("n_rows"),
         F.count(F.lit(1)).alias("n_buckets"),
         F.max("n_docs").alias("max_bucket"),
         F.avg("n_docs").alias("mean_bucket"),
     )
+
+
+def is_hot(cap: int) -> F.Column:
+    """The hot-bucket rule over a bucket_sizes table: a bucket holding more
+    than `cap` docs is dropped before any pair join and recorded. Batch
+    (pairable_bands, cap_hot_bands) and the streaming index cap all apply
+    this one predicate."""
+    return F.col("n_docs") > cap
+
+
+def drop_hot(bands: DataFrame, hot: DataFrame) -> DataFrame:
+    """Band rows whose bucket is not in `hot`.
+
+    Hot keys are OUTLIER buckets, so the anti-join build side is normally
+    tiny — but its COUNT is bounded only by rows/cap, so a forced
+    F.broadcast hint would be an unbounded driver collect on a
+    boilerplate-heavy corpus (millions of distinct over-cap keys at
+    warehouse scale). The hot side sits directly below an aggregation
+    (= an AQE query-stage boundary), so AQE sees its ACTUAL size at
+    runtime and converts the anti-join to broadcast whenever it is under
+    the threshold; adversarial hot sets degrade to a shuffle join instead
+    of an OOM."""
+    return bands.join(hot.select(*BUCKET), BUCKET, "left_anti")
 
 
 def cap_hot_bands(
@@ -95,28 +124,12 @@ def cap_hot_bands(
     caller that later materializes the `hot` side for metrics reuses the
     aggregation instead of re-scanning the full band table.
     """
-    counts = bands.groupBy("tier", "band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
+    counts = bucket_sizes(bands)
     if persist_registry is not None:
         counts = counts.persist()
         persist_registry.append(counts)
-    hot = counts.filter(F.col("n_docs") > cap)
-    # hot keys are OUTLIER buckets, so the anti-join build side is normally
-    # tiny — but its COUNT is bounded only by rows/cap, so a forced
-    # F.broadcast hint would be an unbounded driver collect on a
-    # boilerplate-heavy corpus (millions of distinct over-cap keys at
-    # warehouse scale). The hot side sits directly below an aggregation
-    # (= an AQE query-stage boundary), so AQE sees its ACTUAL size at
-    # runtime and converts the anti-join to broadcast whenever it is under
-    # the threshold; adversarial hot sets degrade to a shuffle join instead
-    # of an OOM.
-    kept = bands.join(
-        hot.select("tier", "band_id", "band_key"),
-        ["tier", "band_id", "band_key"],
-        "left_anti",
-    )
-    return kept, hot
+    hot = counts.filter(is_hot(cap))
+    return drop_hot(bands, hot), hot
 
 
 # broadcast cap for the pairable-bucket gate set — same rationale as
@@ -131,7 +144,7 @@ def pairable_bands(
     persist_registry: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the band table into (pairable, dropped_bucket_stats) where
-    pairable = rows whose bucket holds 2..cap docs.
+    pairable = rows whose bucket holds 2 or more docs and is not hot.
 
     Strictly stronger than cap_hot_bands for SELF-JOIN consumers: a
     singleton bucket can never produce a pair, and at this corpus shape
@@ -141,25 +154,24 @@ def pairable_bands(
     stage fell from 23.1-32.0s to 6.7-9.3s with identical 121,724 output
     pairs). Do NOT use it for band tables that feed a persistent INDEX —
     the streaming index must keep singleton buckets, because a future
-    batch's doc may collide with them (cap_hot_bands remains that path).
+    batch's doc may collide with them (the stream applies is_hot and
+    drop_hot itself, over index and batch combined).
 
     The gate set is counted and broadcast iff small; past
     _PAIRABLE_BROADCAST_MAX rows it degrades to a shuffle join — the
     100TB-safe fallback. The count action is cheap only when `bands`
     derives from a MATERIALIZED table (explode over the signatures
     checkpoint) — don't feed it an expensive lazy plan."""
-    counts = bands.groupBy("tier", "band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    ).persist()
+    counts = bucket_sizes(bands).persist()
     if persist_registry is not None:
         persist_registry.append(counts)
-    hot = counts.filter(F.col("n_docs") > cap)
+    hot = counts.filter(is_hot(cap))
     pairable = counts.filter(
-        (F.col("n_docs") >= 2) & (F.col("n_docs") <= cap)
-    ).select("tier", "band_id", "band_key")
+        (F.col("n_docs") >= 2) & ~is_hot(cap)
+    ).select(*BUCKET)
     gate = (
         F.broadcast(pairable)
         if pairable.count() <= _PAIRABLE_BROADCAST_MAX else pairable
     )
-    kept = bands.join(gate, ["tier", "band_id", "band_key"])
+    kept = bands.join(gate, BUCKET)
     return kept, hot

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .bands import BUCKET
+
 
 def pairs_from_bands(bands: DataFrame, repartition: int = 0) -> DataFrame:
     """(doc_id, tier, band_id, band_key) -> distinct (id_a, id_b) with
@@ -30,16 +32,10 @@ def pairs_from_bands(bands: DataFrame, repartition: int = 0) -> DataFrame:
     b = bands
     if repartition:
         b = b.repartition(repartition, "band_key")
-    left = b.select(
-        F.col("tier"), F.col("band_id"), F.col("band_key"),
-        F.col("doc_id").alias("id_a"),
-    )
-    right = b.select(
-        F.col("tier"), F.col("band_id"), F.col("band_key"),
-        F.col("doc_id").alias("id_b"),
-    )
+    left = b.select(*BUCKET, F.col("doc_id").alias("id_a"))
+    right = b.select(*BUCKET, F.col("doc_id").alias("id_b"))
     return (
-        left.join(right, ["tier", "band_id", "band_key"])
+        left.join(right, BUCKET)
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
@@ -52,10 +48,10 @@ def pairs_with_min_match(bands: DataFrame, min_match: int) -> DataFrame:
     OR-semantics band join (no counting aggregate needed)."""
     if min_match <= 1:
         return pairs_from_bands(bands).withColumn("n_bands", F.lit(None).cast("long"))
-    left = bands.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_a"))
-    right = bands.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_b"))
+    left = bands.select(*BUCKET, F.col("doc_id").alias("id_a"))
+    right = bands.select(*BUCKET, F.col("doc_id").alias("id_b"))
     matched = (
-        left.join(right, ["tier", "band_id", "band_key"])
+        left.join(right, BUCKET)
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))

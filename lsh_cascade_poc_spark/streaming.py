@@ -9,9 +9,14 @@ practice, so the engine ships an incremental path:
          the file-per-conversation-chunk contract; for turns arriving ACROSS
          micro-batches use streaming_state.assemble_conversations_stream,
          the applyInPandasWithState + event-time-timeout assembler)
-      2. compute signatures with the SAME kernels as the batch pipeline
+      2. compute signatures with the SAME stage definitions as the batch
+         pipeline (build_docs, build_signatures, the hot-bucket rule,
+         overlap_pairs, merge_dup_pairs — one copy of each cascade tier)
       3. match new docs against the EXISTING banded index (join, not self-join)
       4. append new signatures + discovered dup pairs to the index tables
+
+The stream runs the coarse band tier and the overlap probe only: the tight
+tier and the SimHash pass are batch-only.
 
 Each micro-batch costs one band join of (new x indexed) instead of a full
 self-join — the standard "probe the inverted index" incremental dedup. All
@@ -21,15 +26,23 @@ Spark's checkpointLocation + idempotent batch-id guard.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .checkpoint import resolve_fs
 from .config import DedupConfig
-from .operators.assemble import assemble_conversations, with_doc_id
-from .operators.bands import explode_bands
-from .pipeline import build_signatures
+from .operators.bands import BUCKET, bucket_sizes, drop_hot, explode_bands, is_hot
+from .operators.pairs import pairs_from_bands, split_exact_duplicates
+from .operators.suffix import winnow_fingerprints
+from .operators.verify import verify_pairs_exact_jaccard
+from .pipeline import (
+    build_docs,
+    build_signatures,
+    merge_dup_pairs,
+    overlap_docs_gate,
+    overlap_pairs,
+    release,
+)
 
 TURNS_DDL = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -47,6 +60,13 @@ class IncrementalDedup:
         self.spark = spark
         self.index_dir = index_dir
         self.cfg = cfg or DedupConfig()
+        if not self.cfg.store_shingles:
+            raise ValueError(
+                "IncrementalDedup needs store_shingles=True: verify reads "
+                "the indexed representatives' shingles from the signature "
+                "index, and the index keeps no text for short docs to "
+                "re-shingle them from (slim signatures are batch-only)"
+            )
         # fold per-batch subdirectories into one compacted partition every
         # this many batches (0 disables). Without it the index accumulates
         # one directory per micro-batch FOREVER and every batch's probe pays
@@ -60,18 +80,8 @@ class IncrementalDedup:
         # extension can verify both sides). Overlap evidence lands in
         # dup_pairs with the batch path's jaccard = -1 marker.
         self.enable_overlap = enable_overlap
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         fs.create_dir(root, recursive=True)
-
-    def _fs(self):
-        """(pyarrow FileSystem, index_dir path inside it) — URI-aware like
-        StageStore, so the index can live on s3://…/hdfs://… in a cluster
-        deployment while the driver's marker bookkeeping keeps working."""
-        from pyarrow import fs as pafs
-
-        if "://" in self.index_dir:
-            return pafs.FileSystem.from_uri(self.index_dir)
-        return pafs.LocalFileSystem(), os.path.abspath(self.index_dir)
 
     def _path(self, name: str) -> str:
         """Path as Spark sees it (keeps the URI scheme)."""
@@ -80,7 +90,7 @@ class IncrementalDedup:
     def _exists(self, name: str) -> bool:
         from pyarrow import fs as pafs
 
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         sel = pafs.FileSelector(f"{root.rstrip('/')}/{name}", recursive=True,
                                 allow_not_found=True)
         return any(
@@ -95,7 +105,7 @@ class IncrementalDedup:
         count only when their ``_compact_<gen>_done`` marker exists."""
         from pyarrow import fs as pafs
 
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         infos = fs.get_file_info(
             pafs.FileSelector(f"{root.rstrip('/')}/{name}",
                               allow_not_found=True)
@@ -170,9 +180,7 @@ class IncrementalDedup:
              their markers (a crash here leaves garbage, not wrong answers —
              see _table_paths).
         """
-        from pyarrow import fs as pafs
-
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         for name in ("docs", "signatures", "bands", "fp_index", "dup_pairs",
                      "overlap_fps", "texts", "hot_band_drops"):
             dirs, gens = self._list_table(name)
@@ -208,37 +216,26 @@ class IncrementalDedup:
             f"{self._path(name)}/batch_id={batch_id}"
         )
 
-    def _bands_of(self, signatures: DataFrame) -> DataFrame:
-        cfg = self.cfg
-        return explode_bands(
-            signatures, "minhash", tier=0,
-            n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
-        )
+    def _index(self, name: str, batch_id: int, empty: DataFrame) -> DataFrame:
+        """The index table `name` as this batch must see it, or `empty`'s
+        schema with no rows when no batch has written it yet: a missing
+        index is just an EMPTY index, so the first and every later batch
+        run one code path and a rule change can never diverge between them
+        (the empty-side joins are no-ops under AQE)."""
+        if self._exists(name):
+            return self._read_table(name, exclude_batch=batch_id)
+        return empty.limit(0)
 
     def process_batch(self, turns_batch: DataFrame, batch_id: int) -> None:
         cfg = self.cfg
         from pyarrow import fs as pafs
 
-        fs, root = self._fs()
+        fs, root = resolve_fs(self.index_dir)
         done_marker = f"{root.rstrip('/')}/_batch_{batch_id}_done"
         if fs.get_file_info(done_marker).type != pafs.FileType.NotFound:
             return  # replayed micro-batch after restart: already applied
 
-        from .functions.text import fingerprint_md5
-        from .operators.pairs import tag_exact_duplicates
-
-        docs = tag_exact_duplicates(
-            with_doc_id(
-                assemble_conversations(
-                    turns_batch, max_turn_chars=cfg.max_turn_chars,
-                    min_doc_chars=cfg.min_doc_chars,
-                )
-            ).withColumn(
-                # max_chars=0: full-content exact key, same as the batch
-                # path (see functions/text.py fingerprint_md5)
-                "fingerprint", fingerprint_md5(F.col("doc_text"), max_chars=0)
-            )
-        ).localCheckpoint(eager=True)
+        docs = build_docs(turns_batch, cfg).localCheckpoint(eager=True)
 
         # exact-fingerprint collapse BEFORE the signature kernel or banding
         # (same scale move as the batch path, pipeline.py run_dedup): an
@@ -249,75 +246,50 @@ class IncrementalDedup:
         # their min-id rep; reps whose fingerprint is already indexed
         # (fp_index: one row per distinct fingerprint ever seen) attach to
         # the indexed root by an equi-join and are not signed or banded.
-        reps_docs = docs.filter(F.col("doc_id") == F.col("_root"))
-        exact_pairs = docs.filter(F.col("doc_id") != F.col("_root")).select(
-            F.col("_root").alias("id_a"), F.col("doc_id").alias("id_b")
-        ).withColumn("jaccard", F.lit(1.0))
-        if self._exists("fp_index"):
-            idx_fp = self._read_table("fp_index", exclude_batch=batch_id)
-            matched = reps_docs.join(
-                idx_fp.withColumnRenamed("root_id", "id_old"), "fingerprint"
-            ).select("doc_id", "id_old")
-            exact_old = (
-                matched.select(
-                    F.least("doc_id", "id_old").alias("id_a"),
-                    F.greatest("doc_id", "id_old").alias("id_b"),
-                )
-                # a conversation re-delivered in a later batch (at-least-once
-                # source) matches its OWN fp_index row — same guard as the
-                # band-probe join below, else a degenerate self-pair lands in
-                # dup_pairs
-                .filter(F.col("id_a") != F.col("id_b"))
-                .withColumn("jaccard", F.lit(1.0))
+        reps_docs, star_edges = split_exact_duplicates(docs)
+        idx_fp = self._index("fp_index", batch_id, reps_docs.select(
+            "fingerprint", F.col("doc_id").alias("root_id")))
+        matched = reps_docs.join(
+            idx_fp.withColumnRenamed("root_id", "id_old"), "fingerprint"
+        ).select("doc_id", "id_old")
+        exact_old = (
+            matched.select(
+                F.least("doc_id", "id_old").alias("id_a"),
+                F.greatest("doc_id", "id_old").alias("id_b"),
             )
-            fresh_reps_docs = reps_docs.join(
-                matched.select("doc_id"), "doc_id", "left_anti"
-            )
-        else:
-            exact_old = None
-            fresh_reps_docs = reps_docs
+            # a conversation re-delivered in a later batch (at-least-once
+            # source) matches its OWN fp_index row — same guard as the
+            # band-probe join below, else a degenerate self-pair lands in
+            # dup_pairs
+            .filter(F.col("id_a") != F.col("id_b"))
+        )
+        fresh_reps_docs = reps_docs.join(
+            matched.select("doc_id"), "doc_id", "left_anti"
+        )
         sigs = build_signatures(fresh_reps_docs, cfg).localCheckpoint(eager=True)
-        new_bands = self._bands_of(sigs)
-
-        # a missing index is just an EMPTY index: one code path for the first
-        # and every later batch, so a cap-semantics fix can never silently
-        # diverge between them (the empty-side joins are no-ops under AQE)
-        if self._exists("bands"):
-            idx_bands = self._read_table("bands", exclude_batch=batch_id)
-            idx_sigs = self._read_table("signatures", exclude_batch=batch_id)
-        else:
-            idx_bands = new_bands.limit(0)
-            idx_sigs = sigs.limit(0)
+        new_bands = explode_bands(
+            sigs, "minhash", tier=0,
+            n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
+        )
+        idx_bands = self._index("bands", batch_id, new_bands)
+        idx_sigs = self._index("signatures", batch_id, sigs)
         # hot-band cap over the COMBINED (index ∪ new) band table: a
         # bucket that grew hot across batches is excluded from probing on
         # BOTH sides and from the index append, and the drop is recorded
-        # (same cap rule as the batch path, operators/bands.py:82) — the
-        # probe join already scans the full index, so the count pre-pass
-        # adds no asymptotic cost
-        combined = idx_bands.select("tier", "band_id", "band_key").unionAll(
-            new_bands.select("tier", "band_id", "band_key")
-        )
-        hot = (
-            combined.groupBy("tier", "band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") > cfg.hot_band_cap)
-            .localCheckpoint(eager=True)
-        )
-        hot_keys = hot.select("tier", "band_id", "band_key")
-        kept_new = new_bands.join(
-            hot_keys, ["tier", "band_id", "band_key"], "left_anti"
-        ).localCheckpoint(eager=True)
-        kept_idx = idx_bands.join(
-            hot_keys, ["tier", "band_id", "band_key"], "left_anti"
-        )
-        # probe: new docs vs existing index (plus new-vs-new self-join)
-        probe = kept_new.select(
-            "tier", "band_id", "band_key", F.col("doc_id").alias("id_new")
-        )
+        # (the batch path's rule, operators/bands.py is_hot) — the probe
+        # join already scans the full index, so the count pre-pass adds no
+        # asymptotic cost; materialized once, so the index is not scanned
+        # again for the drop
+        hot = bucket_sizes(
+            idx_bands.select(*BUCKET).unionAll(new_bands.select(*BUCKET))
+        ).filter(is_hot(cfg.hot_band_cap)).localCheckpoint(eager=True)
+        kept_new = drop_hot(new_bands, hot).localCheckpoint(eager=True)
+        kept_idx = drop_hot(idx_bands, hot)
+        # probe: new docs vs existing index, plus the new-vs-new self-join
         hits_old = (
-            probe.join(kept_idx.select(
-                "tier", "band_id", "band_key", F.col("doc_id").alias("id_old")),
-                ["tier", "band_id", "band_key"])
+            kept_new.select(*BUCKET, F.col("doc_id").alias("id_new"))
+            .join(kept_idx.select(*BUCKET, F.col("doc_id").alias("id_old")),
+                  BUCKET)
             .select(
                 F.least("id_new", "id_old").alias("id_a"),
                 F.greatest("id_new", "id_old").alias("id_b"),
@@ -325,14 +297,7 @@ class IncrementalDedup:
             .filter(F.col("id_a") != F.col("id_b"))
             .distinct()
         )
-        l = kept_new.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_a"))
-        r = kept_new.select("tier", "band_id", "band_key", F.col("doc_id").alias("id_b"))
-        hits_new = (
-            l.join(r, ["tier", "band_id", "band_key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct()
-        )
-        cands = hits_old.unionByName(hits_new).distinct()
+        cands = hits_old.unionByName(pairs_from_bands(kept_new)).distinct()
 
         # long-overlap stage, incremental (batch analog: pipeline.py
         # overlap_pairs): fresh reps' winnow fingerprints probe the
@@ -343,78 +308,32 @@ class IncrementalDedup:
         # path's jaccard = -1 evidence marker.
         ov_pairs = None
         if self.enable_overlap:
-            from .operators.suffix import (
-                overlap_candidates_probe,
-                verify_overlaps,
-                winnow_fingerprints,
-            )
-
-            # exact prefilter (batch parity, pipeline.overlap_pairs): docs
-            # shorter than min_overlap_chars bytes can never verify
-            long_reps = fresh_reps_docs.filter(
-                F.octet_length(F.col("doc_text")) >= cfg.min_overlap_chars
-            )
+            long_reps = overlap_docs_gate(fresh_reps_docs, cfg) \
+                .select("doc_id", "doc_text")
             new_fps = winnow_fingerprints(
                 long_reps, cfg.winnow_kgram_chars, cfg.winnow_window
             ).localCheckpoint(eager=True)
-            if self._exists("overlap_fps"):
-                idx_ofps = self._read_table("overlap_fps",
-                                            exclude_batch=batch_id)
-                idx_texts = self._read_table("texts", exclude_batch=batch_id)
-            else:
-                idx_ofps = new_fps.limit(0)
-                idx_texts = fresh_reps_docs.select(
-                    "doc_id", "doc_text"
-                ).limit(0)
+            texts = self._index("texts", batch_id, long_reps) \
+                .unionByName(long_reps)
             ov_persists: list = []
-            ov_cands = overlap_candidates_probe(
-                idx_ofps, new_fps,
-                hot_cap=cfg.overlap_hot_cap,
-                min_shared_fps=cfg.overlap_min_shared_fps,
-                persist_registry=ov_persists,
-            )
-            texts_all = idx_texts.unionByName(
-                long_reps.select("doc_id", "doc_text")
-            )
-            ov_pairs = (
-                verify_overlaps(ov_cands, texts_all, cfg.winnow_kgram_chars,
-                                cfg.min_overlap_chars)
-                .select("id_a", "id_b")
-                .localCheckpoint(eager=True)
-            )
-            # the gate set persisted inside the candidate probe is consumed
-            # by the materialization above — release it NOW, or a long
-            # stream accumulates one small persisted DF per micro-batch
-            for df in ov_persists:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+            ov_pairs = overlap_pairs(
+                texts, new_fps, cfg, persist_registry=ov_persists,
+                indexed_fps=self._index("overlap_fps", batch_id, new_fps),
+            ).localCheckpoint(eager=True)
+            release(ov_persists)
             cands = cands.unionByName(ov_pairs).distinct()
 
         all_sigs = idx_sigs.unionByName(sigs).localCheckpoint(eager=True)
-
-        from .operators.verify import verify_pairs_exact_jaccard
-
-        dup = verify_pairs_exact_jaccard(
+        verified = verify_pairs_exact_jaccard(
             cands, all_sigs, threshold=cfg.jaccard_threshold
         )
-        dup = dup.unionByName(exact_pairs.select("id_a", "id_b", "jaccard"))
-        if exact_old is not None:
-            dup = dup.unionByName(exact_old)
-        if ov_pairs is not None:
-            # overlap-evidence-only rows: substring-proven, below the
-            # Jaccard threshold (pipeline.py overlap_kept analog)
-            ov_only = ov_pairs.join(
-                dup.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-            ).withColumn("jaccard", F.lit(-1.0))
-            dup = dup.unionByName(ov_only)
-        dup = dup.groupBy("id_a", "id_b").agg(F.max("jaccard").alias("jaccard"))
         # materialize BEFORE touching the index dirs: dup's lazy plan reads
         # the existing bands/signatures batches, and a replay OVERWRITES this
         # batch's own subdirectories below — writing dup lazily after that
         # would read deleted files
-        dup = dup.localCheckpoint(eager=True)
+        dup = merge_dup_pairs(
+            verified, star_edges.unionByName(exact_old), ov_pairs
+        ).localCheckpoint(eager=True)
 
         # batch-scoped subdirectories + overwrite: a crash between the writes
         # is healed by the replay overwriting the SAME directories, so the
@@ -442,10 +361,7 @@ class IncrementalDedup:
             # raw text. At cluster scale this table is a projection of the
             # corpus the stream already owns — point it at the source table
             # instead of materializing when storage matters.
-            self._write_batch(
-                long_reps.select("doc_id", "doc_text"), "texts",
-                batch_id,
-            )
+            self._write_batch(long_reps, "texts", batch_id)
         # A5 analog: dropped hot buckets are recorded, never silent
         self._write_batch(hot, "hot_band_drops", batch_id)
         with fs.open_output_stream(done_marker) as f:

@@ -386,7 +386,7 @@ def test_streaming_overlap_flanked_by_boilerplate(spark, tmp_path):
     """The r3 ADVICE drop scenario, cross-batch: a true >=200-char overlap
     whose doc pair also shares boilerplate before AND after it, with the
     docs arriving in DIFFERENT micro-batches — so the probe-path seed
-    selection (overlap_candidates_probe -> _pair_seed_agg) must produce
+    selection (overlap_candidates(indexed=...) -> _pair_seed_agg) must produce
     the alignment-dominant third seed, not just the boilerplate-landing
     boundary seeds. Pins the streaming path of the seed3 fix (the batch
     path is pinned by test_suffix.test_true_overlap_flanked_by_boilerplate
@@ -416,3 +416,14 @@ def test_streaming_overlap_flanked_by_boilerplate(spark, tmp_path):
     want = tuple(sorted((id_map["convA"], id_map["convB"])))
     assert want in pairs, f"flanked cross-batch overlap missing, got {pairs}"
     assert pairs[want] == -1.0
+
+
+def test_slim_signatures_rejected(spark, tmp_path):
+    """store_shingles=False is batch-only: the index keeps no text for short
+    representatives, so verify could not re-shingle them. The sink refuses
+    the config up front instead of failing inside verify on its first
+    probe."""
+    with pytest.raises(ValueError, match="store_shingles"):
+        IncrementalDedup(spark, str(tmp_path / "index"),
+                         DedupConfig(store_shingles=False))
+    assert not (tmp_path / "index").exists()

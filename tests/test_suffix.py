@@ -228,3 +228,44 @@ def test_pair_seed_agg_matches_python_model(spark):
     assert set(got) == set(want)
     for k in want:
         assert got[k] == want[k], (k, got[k], want[k])
+
+
+def test_overlap_candidates_indexed_probe_partitions_self_join(spark):
+    """Probing an index is the self-join split in two: with the hot cap
+    above every fingerprint bucket, the candidates of the whole table are
+    exactly the indexed part's own candidates plus the new part probing
+    the indexed part (new x indexed and new x new) — row for row, all three
+    seeds and the shared-fp count included."""
+    import random
+
+    rng = random.Random(20261017)
+    passages = [
+        " ".join(rng.choice(["alpha", "beta", "gamma", "delta", "omega",
+                             "sigma", "kappa", "lambda"]) for _ in range(60))
+        for _ in range(5)
+    ]
+    rows = []
+    for doc_id in range(1, 17):
+        parts = [f"doc {doc_id} opening words {rng.random()}"]
+        for p in rng.sample(passages, 2):
+            parts += [p, f"filler {doc_id} {rng.random()}"]
+        rows.append((doc_id, " ".join(parts)))
+    docs = spark.createDataFrame(rows, "doc_id long, doc_text string")
+    fps = winnow_fingerprints(docs, k=24, w=32).localCheckpoint(eager=True)
+    indexed = fps.filter("doc_id % 2 = 0")
+    new = fps.filter("doc_id % 2 = 1")
+    cap = len(rows) + 1
+
+    def cands(*args, **kw):
+        return {tuple(r) for r in overlap_candidates(
+            *args, hot_cap=cap, min_shared_fps=2, **kw).collect()}
+
+    whole = cands(fps)
+    split = cands(indexed)
+    probed = cands(new, indexed=indexed)
+    assert whole, "the corpus must produce candidates"
+    assert split and probed, "both halves must contribute"
+    assert not split & probed
+    assert whole == split | probed
+    # the probe emits only pairs with at least one new (odd) side
+    assert all(r[0] % 2 or r[1] % 2 for r in probed)
