@@ -33,7 +33,7 @@ _COMMIT_MARKER = "_COMMITTED"
 
 METRICS_SCHEMA = (
     "stage string, config_hash string, rows_out bigint, n_partitions int, "
-    "wall_ms double, extra string, finished_at_ms bigint"
+    "wall_ms double, finished_at_ms bigint"
 )
 
 
@@ -74,13 +74,7 @@ class StageStore:
     def load(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._stage_path(stage))
 
-    def materialize(
-        self,
-        stage: str,
-        df_factory,
-        partition_cols: list[str] | None = None,
-        extra_metrics: dict | None = None,
-    ) -> DataFrame:
+    def materialize(self, stage: str, df_factory) -> DataFrame:
         """Run `df_factory()` and persist its result unless the stage already
         committed (resume path: skip recompute entirely and read back).
         Returns the stage DataFrame re-read from storage, so downstream
@@ -90,11 +84,7 @@ class StageStore:
         if self.exists(stage):
             return self.spark.read.parquet(path)
         t0 = time.perf_counter()
-        df: DataFrame = df_factory()
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        df_factory().write.mode("overwrite").parquet(path)
         wall_ms = (time.perf_counter() - t0) * 1000.0
         out = self.spark.read.parquet(path)
         # row count + partition count from parquet FOOTERS (driver-side, no
@@ -102,19 +92,7 @@ class StageStore:
         # serial time to every pipeline run
         fs, fspath = self._fs_path(stage)
         rows, n_parts = self._footer_stats(fs, fspath)
-        self._append_metrics(stage, rows, n_parts, wall_ms, extra_metrics or {})
-        if partition_cols:
-            # one metric row per partition value (e.g. candidates/source=minhash):
-            # a fused multi-tier stage stays per-tier observable (A5) without
-            # per-tier write jobs — counts come from the same parquet footers
-            from pyarrow import fs as pafs
-
-            for info in fs.get_file_info(pafs.FileSelector(fspath)):
-                sub = info.path.rstrip("/").rsplit("/", 1)[-1]
-                if "=" in sub and not info.is_file:
-                    srows, sparts = self._footer_stats(fs, info.path)
-                    self._append_metrics(f"{stage}/{sub}", srows, sparts,
-                                         wall_ms, extra_metrics or {})
+        self._append_metrics(stage, rows, n_parts, wall_ms)
         # atomic-enough commit marker: written only after data + metrics land
         with fs.open_output_stream(f"{fspath}/{_COMMIT_MARKER}") as f:
             f.write(json.dumps({"rows": rows, "wall_ms": wall_ms}).encode())
@@ -135,7 +113,7 @@ class StageStore:
         return rows, files
 
     def _append_metrics(self, stage: str, rows: int, n_parts: int,
-                        wall_ms: float, extra: dict) -> None:
+                        wall_ms: float) -> None:
         """One metric row appended as a single parquet file, written DRIVER-
         side with pyarrow (schema matches METRICS_SCHEMA): a Spark write job
         per stage was another ~0.6s of serial overhead per stage."""
@@ -148,12 +126,10 @@ class StageStore:
             "rows_out": pa.array([rows], type=pa.int64()),
             "n_partitions": pa.array([n_parts], type=pa.int32()),
             "wall_ms": pa.array([wall_ms], type=pa.float64()),
-            "extra": [json.dumps(extra, sort_keys=True)],
             "finished_at_ms": pa.array([int(time.time() * 1000)], type=pa.int64()),
         })
         fs, mdir = self._fs_path("_metrics")
         fs.create_dir(mdir, recursive=True)
-        fname = stage.replace("/", "__")  # per-partition rows: candidates/source=x
         # uuid uniquifier: wall-clock microseconds alone can collide (coarse
         # clocks / concurrent stores sharing a work_dir) and would silently
         # overwrite a sibling metric row
@@ -161,7 +137,7 @@ class StageStore:
 
         pq.write_table(
             table,
-            f"{mdir}/{fname}-{int(time.time() * 1e6)}-{uuid.uuid4().hex[:8]}.parquet",
+            f"{mdir}/{stage}-{int(time.time() * 1e6)}-{uuid.uuid4().hex[:8]}.parquet",
             filesystem=fs,
         )
 

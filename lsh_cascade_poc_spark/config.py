@@ -118,10 +118,6 @@ class DedupConfig:
     # detects it and fails loudly instead of silently merging conversations.
     check_id_collisions: bool = True
 
-    # --- execution ---
-    pair_repartition: int = 0        # 0 = leave to AQE; else explicit repartition
-                                     # on band keys before the self-join
-
     def config_hash(self) -> str:
         payload = json.dumps(asdict(self), sort_keys=True).encode()
         return hashlib.sha256(payload).hexdigest()[:16]

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.pairs import bucket_pairs
+
 
 @dataclass
 class E2LSHParams:
@@ -145,15 +147,11 @@ def explode_e2lsh_buckets(df: DataFrame, buckets_col: str, id_col: str = "vec_id
 
 
 def e2lsh_candidate_pairs(bucket_table: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """F3 all-pairs form: ids sharing any (table, bucket)."""
-    a = bucket_table.select("table_id", "bucket_key", F.col(id_col).alias("id_a"))
-    b = bucket_table.select("table_id", "bucket_key", F.col(id_col).alias("id_b"))
-    return (
-        a.join(b, ["table_id", "bucket_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    """F3 all-pairs form: ids sharing any (table, bucket) — the band join
+    (operators/pairs.py bucket_pairs) keyed by table and bucket."""
+    key = ["table_id", "bucket_key"]
+    rows = bucket_table.select(*key, F.col(id_col).alias("doc_id"))
+    return bucket_pairs(rows, key=key).select("id_a", "id_b").distinct()
 
 
 def _probe_deltas(k: int, n_probes: int) -> list[tuple[int, int]]:

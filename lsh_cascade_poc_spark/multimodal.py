@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions.simhash import hamming64
+from .operators.bands import explode_simhash_bands
+from .operators.pairs import bucket_pairs
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("modality", T.StringType(), False),   # image | audio | video
@@ -240,30 +244,23 @@ def sample_video_frames(
 def media_dedup_pairs(media: DataFrame, hamming_tau: int = 6,
                       deterministic_fake: bool = True) -> DataFrame:
     """Embedding-cosine near-dup over media features: feature extraction ->
-    sign-bit SimHash (identity hyperplanes) -> band join + Hamming filter.
-    Reuses the text pipeline's banding machinery, proving the dedup engine is
+    sign-bit SimHash (identity hyperplanes) -> 4 x 16-bit band join +
+    Hamming filter. Reuses the text pipeline's SimHash banding
+    (operators/bands.py explode_simhash_bands), its band join
+    (operators/pairs.py bucket_pairs) and its Hamming distance
+    (functions/simhash.py hamming64), proving the dedup engine is
     modality-agnostic once a feature column exists."""
     feats = extract_features(media, deterministic_fake)
     signbit = (
         "aggregate(sequence(0, 63), 0L,"
         " (acc, i) -> acc + IF(element_at(feature, i + 1) > 0.0F, shiftleft(1L, i), 0L))"
     )
-    sigs = feats.select("media_id", F.expr(signbit).alias("h"))
-    bands = sigs.select(
-        "media_id", "h",
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned(F.col("h"), i * 16).bitwiseAND(F.lit(0xFFFF))
-            for i in range(4)
-        ])).alias("band_id", "band_key"),
-    )
-    a = bands.select("band_id", "band_key", F.col("media_id").alias("id_a"),
-                     F.col("h").alias("h_a"))
-    b = bands.select("band_id", "band_key", F.col("media_id").alias("id_b"),
-                     F.col("h").alias("h_b"))
+    sigs = feats.select(F.col("media_id").alias("doc_id"),
+                        F.expr(signbit).alias("simhash"))
     return (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))) <= hamming_tau)
+        bucket_pairs(explode_simhash_bands(sigs, n_bands=4, band_bits=16),
+                     key=["band_id", "band_key"], carry=["simhash"])
+        .filter(hamming64(F.col("simhash_a"), F.col("simhash_b")) <= hamming_tau)
         .select("id_a", "id_b")
         .distinct()
     )

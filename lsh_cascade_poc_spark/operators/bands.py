@@ -25,16 +25,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.simhash import simhash_band_key
 
-def band_keys_column(sig_col: str, tier: int, n_bands: int, rows_per_band: int,
-                     lane_offset: int = 0) -> F.Column:
-    """array<long> of n_bands keys; band b = xxhash64(tier, b, lanes[b*r : b*r+r]).
-    `lane_offset` lets tiers use disjoint signature regions."""
+
+def band_keys_column(sig_col: str, tier: int, n_bands: int,
+                     rows_per_band: int) -> F.Column:
+    """array<long> of n_bands keys; band b = xxhash64(tier, b, lanes[b*r : b*r+r])."""
     keys = [
         F.xxhash64(
             F.lit(tier),
             F.lit(b),
-            F.slice(F.col(sig_col), lane_offset + b * rows_per_band + 1, rows_per_band),
+            F.slice(F.col(sig_col), b * rows_per_band + 1, rows_per_band),
         )
         for b in range(n_bands)
     ]
@@ -47,19 +48,31 @@ def explode_bands(
     tier: int,
     n_bands: int,
     rows_per_band: int,
-    id_col: str = "doc_id",
-    lane_offset: int = 0,
 ) -> DataFrame:
     """-> (doc_id, tier, band_id, band_key). posexplode keeps the band index,
     mirroring the segment_id column of the reference's segment index."""
     return (
         signatures.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.posexplode(
-                band_keys_column(sig_col, tier, n_bands, rows_per_band, lane_offset)
+                band_keys_column(sig_col, tier, n_bands, rows_per_band)
             ).alias("band_id", "band_key"),
         )
         .withColumn("tier", F.lit(tier))
+    )
+
+
+def explode_simhash_bands(signatures: DataFrame, n_bands: int,
+                          band_bits: int) -> DataFrame:
+    """(doc_id, simhash) -> (doc_id, simhash, band_id, band_key): one row
+    per `band_bits`-bit chunk of the SimHash (chunk_hash analog). The text
+    pipeline's SimHash pass and media dedup both band through this."""
+    return signatures.select(
+        "doc_id", "simhash",
+        F.posexplode(F.array(*[
+            simhash_band_key(F.col("simhash"), i, band_bits)
+            for i in range(n_bands)
+        ])).alias("band_id", "band_key"),
     )
 
 
@@ -87,9 +100,10 @@ def band_index_stats(bands: DataFrame) -> DataFrame:
 
 def is_hot(cap: int) -> F.Column:
     """The hot-bucket rule over a bucket_sizes table: a bucket holding more
-    than `cap` docs is dropped before any pair join and recorded. Batch
-    (pairable_bands, cap_hot_bands) and the streaming index cap all apply
-    this one predicate."""
+    than `cap` docs is dropped before any pair join and recorded. The band
+    tiers (pairable_bands), the streaming index cap and the overlap
+    fingerprint gate (operators/suffix.py _shared_fp_gate) all apply this
+    one predicate."""
     return F.col("n_docs") > cap
 
 
@@ -108,35 +122,26 @@ def drop_hot(bands: DataFrame, hot: DataFrame) -> DataFrame:
     return bands.join(hot.select(*BUCKET), BUCKET, "left_anti")
 
 
-def cap_hot_bands(
-    bands: DataFrame, cap: int,
-    persist_registry: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split the band table into (kept, dropped_bucket_stats).
-
-    dropped_bucket_stats(tier, band_id, band_key, n_docs) — written to the
-    metrics table so the drop is observable, not silent. The frequency
-    pre-pass is one partial-aggregated groupBy (map-side combine), cheap
-    relative to the self-join it protects.
-
-    When `persist_registry` is given, the per-bucket count table (small:
-    one row per distinct bucket) is persisted and appended to it, so a
-    caller that later materializes the `hot` side for metrics reuses the
-    aggregation instead of re-scanning the full band table.
-    """
-    counts = bucket_sizes(bands)
-    if persist_registry is not None:
-        counts = counts.persist()
-        persist_registry.append(counts)
-    hot = counts.filter(is_hot(cap))
-    return drop_hot(bands, hot), hot
+# Broadcast cap for a bucket GATE set (the pairable band buckets, the
+# shared overlap fingerprints): below this row count the gate join
+# broadcasts, above it it stays a shuffle join. Why not the session-wide AQE
+# threshold: that was deliberately lowered to 8MB after mid-size TEXT
+# relations stalled the driver (session.py rationale) — gate sets are the
+# one relation class where a bigger broadcast measurably pays (r5 A/B on
+# the 19.6M-fp bench corpus, interleaved draws: broadcast 25.1-30.6s vs
+# shuffle-gate 35.8-66.3s vs shuffle_hash-hint 30.1-60.2s, identical
+# 309,711 output rows). Scale: gate sets grow with the corpus, so at the
+# 100TB design point the count exceeds this cap and the join falls back to
+# a shuffle on its own — the broadcast is an optimization the runtime size
+# decides, never an assumption.
+GATE_BROADCAST_MAX = 8_000_000
 
 
-# broadcast cap for the pairable-bucket gate set — same rationale as
-# operators/suffix.py _GATE_BROADCAST_MAX_FPS (the one relation class where
-# a bigger-than-session-threshold broadcast measurably pays; falls back to
-# a shuffle join on its own when the corpus outgrows it)
-_PAIRABLE_BROADCAST_MAX = 8_000_000
+def size_gated_broadcast(gate: DataFrame) -> DataFrame:
+    """`gate`, broadcast iff it has at most GATE_BROADCAST_MAX rows. The
+    count is an eager job: persist `gate` (or the aggregate it filters)
+    first, so the join reuses what the count computed."""
+    return F.broadcast(gate) if gate.count() <= GATE_BROADCAST_MAX else gate
 
 
 def pairable_bands(
@@ -146,19 +151,18 @@ def pairable_bands(
     """Split the band table into (pairable, dropped_bucket_stats) where
     pairable = rows whose bucket holds 2 or more docs and is not hot.
 
-    Strictly stronger than cap_hot_bands for SELF-JOIN consumers: a
-    singleton bucket can never produce a pair, and at this corpus shape
-    most buckets are singletons, so the self-join's sort/probe input
-    shrinks several-fold (measured on the 3.84M-turn bench corpus,
-    local[4], interleaved draws: the full coarse+tight minhash candidate
-    stage fell from 23.1-32.0s to 6.7-9.3s with identical 121,724 output
-    pairs). Do NOT use it for band tables that feed a persistent INDEX —
+    Built for SELF-JOIN consumers: a singleton bucket can never produce a
+    pair, and at this corpus shape most buckets are singletons, so the
+    self-join's sort/probe input shrinks several-fold (measured on the
+    3.84M-turn bench corpus, local[4], interleaved draws: the full
+    coarse+tight minhash candidate stage fell from 23.1-32.0s to 6.7-9.3s
+    with identical 121,724 output pairs). Do NOT use it for band tables that feed a persistent INDEX —
     the streaming index must keep singleton buckets, because a future
     batch's doc may collide with them (the stream applies is_hot and
     drop_hot itself, over index and batch combined).
 
     The gate set is counted and broadcast iff small; past
-    _PAIRABLE_BROADCAST_MAX rows it degrades to a shuffle join — the
+    GATE_BROADCAST_MAX rows it degrades to a shuffle join — the
     100TB-safe fallback. The count action is cheap only when `bands`
     derives from a MATERIALIZED table (explode over the signatures
     checkpoint) — don't feed it an expensive lazy plan."""
@@ -169,9 +173,4 @@ def pairable_bands(
     pairable = counts.filter(
         (F.col("n_docs") >= 2) & ~is_hot(cap)
     ).select(*BUCKET)
-    gate = (
-        F.broadcast(pairable)
-        if pairable.count() <= _PAIRABLE_BROADCAST_MAX else pairable
-    )
-    kept = bands.join(gate, BUCKET)
-    return kept, hot
+    return bands.join(size_gated_broadcast(pairable), BUCKET), hot

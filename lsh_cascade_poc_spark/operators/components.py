@@ -101,7 +101,6 @@ def _local_union_find(edge_rows) -> list[tuple[int, int]]:
 def connected_components(
     pairs: DataFrame,
     max_iterations: int = 20,
-    checkpoint_each_round: bool = True,
     local_finish_edges: int = 250_000,
 ) -> DataFrame:
     """pairs(id_a, id_b) -> clusters(doc_id, cluster_id) where cluster_id is
@@ -135,13 +134,11 @@ def connected_components(
         ).collect()[0]
         return int(row.n), int(row.chk)
 
-    edges = _canonical(pairs)
-    if checkpoint_each_round:
-        # lazy: the _signature collect right below materializes the
-        # checkpoint — eager=True would run a SEPARATE job first, doubling
-        # the per-round driver round-trips (each is ~0.3-0.5s of serial
-        # scheduling; the CC stage's wall is almost entirely these)
-        edges = edges.localCheckpoint(eager=False)
+    # lazy: the _signature collect right below materializes the
+    # checkpoint — eager=True would run a SEPARATE job first, doubling the
+    # per-round driver round-trips (each is ~0.3-0.5s of serial scheduling;
+    # the CC stage's wall is almost entirely these)
+    edges = _canonical(pairs).localCheckpoint(eager=False)
     sig = _signature(edges)
 
     def _finish_local(e: DataFrame) -> DataFrame:
@@ -176,8 +173,7 @@ def connected_components(
         after = edges
         for _r in range(2):
             after = _small_star(_large_star(after))
-        if checkpoint_each_round:
-            after = after.localCheckpoint(eager=False)
+        after = after.localCheckpoint(eager=False)
         new_sig = _signature(after)
         edges = after
         if 0 < new_sig[0] <= local_finish_edges:

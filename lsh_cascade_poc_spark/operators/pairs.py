@@ -7,6 +7,11 @@ once: self-join the exploded band table on (tier, band_id, band_key) with
 id_a < id_b. The reference's min-match counting knob (DF-LSH band_filter,
 /root/reference/src/dflsh.py:187-197,373-383) becomes groupBy(pair).count >= m.
 
+`bucket_pairs` is the ONE banded join: the MinHash tiers, the SimHash pass,
+the winnow-fingerprint overlap candidates, the E2LSH tables, media dedup and
+the streaming sink's index probe (its `indexed=` form) all call it and
+differ only in the bucket key, the carried columns and the reduction.
+
 Cascade semantics (mirrors the 3-stage search, src/pipeline.py:68-119):
   tier 0 (coarse bands, few rows/band, high recall) generates pairs over the
   whole corpus; tier 1 (tight bands) is computed ONLY for docs that survived
@@ -24,22 +29,60 @@ from pyspark.sql import functions as F
 from .bands import BUCKET
 
 
-def pairs_from_bands(bands: DataFrame, repartition: int = 0) -> DataFrame:
-    """(doc_id, tier, band_id, band_key) -> distinct (id_a, id_b) with
-    id_a < id_b. The self-join shuffles both sides on the band key — this is
-    the pipeline's dominant shuffle; `repartition` pins the partition count
-    when AQE's estimate is off at very large scale."""
-    b = bands
-    if repartition:
-        b = b.repartition(repartition, "band_key")
-    left = b.select(*BUCKET, F.col("doc_id").alias("id_a"))
-    right = b.select(*BUCKET, F.col("doc_id").alias("id_b"))
-    return (
-        left.join(right, BUCKET)
+def bucket_pairs(rows: DataFrame, key: list[str] = BUCKET, carry=(),
+                 indexed: DataFrame | None = None) -> DataFrame:
+    """The banded join every candidate pass calls: docs sharing a bucket
+    `key` become pairs. rows(*key, doc_id, *carry) -> one row per (shared
+    bucket, doc pair): (id_a, id_b) with id_a < id_b plus {c}_a / {c}_b for
+    each carried column. NOT deduplicated — a pair sharing m buckets yields
+    m rows, and each caller reduces them its own way (distinct, a per-pair
+    count, the overlap seed aggregate).
+
+    `indexed`: the bucket rows of an existing index. `rows` then holds only
+    the NEW docs, and the output is new x new (the self-join) plus new x
+    indexed, oriented by least/greatest with the carried columns swapped to
+    match; a doc present on both sides (a re-delivered conversation) never
+    pairs with itself. The index is only ever a join build side, so
+    indexed x indexed rows — pairs an earlier call already emitted — are
+    never produced. With no index this is the batch self-join."""
+    key = list(key)
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(*key, F.col("doc_id").alias(f"id_{s}"),
+                         *[F.col(c).alias(f"{c}_{s}") for c in carry])
+
+    cols = ["id_a", "id_b"] + [f"{c}_{s}" for s in "ab" for c in carry]
+    out = (
+        side(rows, "a").join(side(rows, "b"), key)
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        .select(*cols)
     )
+    if indexed is None:
+        return out
+    new_first = F.col("id_n") < F.col("id_i")
+    probe = (
+        side(rows, "n").join(side(indexed, "i"), key)
+        .filter(F.col("id_n") != F.col("id_i"))
+        .select(
+            F.least("id_n", "id_i").alias("id_a"),
+            F.greatest("id_n", "id_i").alias("id_b"),
+            *[F.when(new_first, F.col(f"{c}_n")).otherwise(F.col(f"{c}_i"))
+              .alias(f"{c}_a") for c in carry],
+            *[F.when(new_first, F.col(f"{c}_i")).otherwise(F.col(f"{c}_n"))
+              .alias(f"{c}_b") for c in carry],
+        )
+    )
+    return out.unionByName(probe)
+
+
+def pairs_from_bands(bands: DataFrame,
+                     indexed: DataFrame | None = None) -> DataFrame:
+    """(doc_id, tier, band_id, band_key) -> distinct (id_a, id_b) with
+    id_a < id_b: the band join, deduplicated across bands. The join
+    shuffles both sides on the band key — this is the pipeline's dominant
+    shuffle. `indexed`: an existing index's band rows, probed by `bands`
+    (see bucket_pairs)."""
+    return bucket_pairs(bands, indexed=indexed).select("id_a", "id_b").distinct()
 
 
 def pairs_with_min_match(bands: DataFrame, min_match: int) -> DataFrame:
@@ -48,15 +91,12 @@ def pairs_with_min_match(bands: DataFrame, min_match: int) -> DataFrame:
     OR-semantics band join (no counting aggregate needed)."""
     if min_match <= 1:
         return pairs_from_bands(bands).withColumn("n_bands", F.lit(None).cast("long"))
-    left = bands.select(*BUCKET, F.col("doc_id").alias("id_a"))
-    right = bands.select(*BUCKET, F.col("doc_id").alias("id_b"))
-    matched = (
-        left.join(right, BUCKET)
-        .filter(F.col("id_a") < F.col("id_b"))
+    return (
+        bucket_pairs(bands)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
+        .filter(F.col("n_bands") >= min_match)
     )
-    return matched.filter(F.col("n_bands") >= min_match).select("id_a", "id_b", "n_bands")
 
 
 def survivors(pairs: DataFrame) -> DataFrame:
@@ -93,20 +133,3 @@ def split_exact_duplicates(
     )
     return reps, star
 
-
-def collapse_exact_duplicates(
-    docs_with_fp: DataFrame, fp_col: str = "fingerprint", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
-    """One window pass -> (representatives, star_edges).
-
-    representatives = the min-id row of every fingerprint group; star_edges =
-    (root, member) for every non-representative. THE key scale move: exact
-    duplicates (boilerplate floods, mirrored dumps) collapse to one row
-    BEFORE any LSH banding, so an m-fold identical document costs m-1 star
-    edges instead of m fingerprint-colliding rows in every band bucket.
-    Near-dup relations are invariant under the collapse (identical text =>
-    identical shingles => identical jaccard to any third doc), and connected
-    components re-attaches members through the star edges."""
-    return split_exact_duplicates(
-        tag_exact_duplicates(docs_with_fp, fp_col, id_col), id_col
-    )

@@ -37,6 +37,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .bands import is_hot, size_gated_broadcast
+from .pairs import bucket_pairs
+
 # two parallel arrays (not array<struct>): lets the kernel emit numpy arrays
 # straight through Arrow with no per-row Python dict materialization
 _FP_SCHEMA = T.StructType(
@@ -328,24 +331,9 @@ def winnow_fingerprints(docs: DataFrame, k: int, w: int,
     )
 
 
-# Broadcast cap for the shared-fp GATE set (single int64 column): below
-# this row count the gate semi-join broadcasts (~8 bytes/row -> <=64MB
-# blob), above it it stays a shuffle join. Why not the session-wide AQE
-# threshold: that was deliberately lowered to 8MB after mid-size TEXT
-# relations stalled the driver (session.py rationale) — this set is the
-# one relation where a bigger broadcast measurably pays (r5 A/B on the
-# 19.6M-fp bench corpus, interleaved draws: broadcast 25.1-30.6s vs
-# shuffle-gate 35.8-66.3s vs shuffle_hash-hint 30.1-60.2s, identical
-# 309,711 output rows). Scale: shared fps grow with the corpus, so at the
-# 100TB design point the count exceeds this cap and the code falls back to
-# the shuffle join on its own — the broadcast is an optimization the
-# runtime size decides, never an assumption.
-_GATE_BROADCAST_MAX_FPS = 8_000_000
-
-
 def _shared_fp_gate(fps: DataFrame, hot_cap: int,
                     persist_registry: list | None = None) -> DataFrame:
-    """fps filtered to fingerprints SHARED by 2..hot_cap docs. The lower
+    """The fingerprints (fp) SHARED by 2..hot_cap docs of `fps`. The lower
     bound is the big win: winnowing over distinct text makes most
     fingerprints singletons (measured at the 2.4M-turn bench corpus: 9.36M
     distinct fps, only 1.47M shared — 65% of the 12.28M exploded rows were
@@ -356,18 +344,14 @@ def _shared_fp_gate(fps: DataFrame, hot_cap: int,
 
     The gate set is persisted and counted (the count reuses the persisted
     aggregate, so the expensive fps pass still runs ONCE), then broadcast
-    iff it is small enough — see _GATE_BROADCAST_MAX_FPS."""
+    iff it is small enough — see bands.py GATE_BROADCAST_MAX."""
     counts = fps.groupBy("fp").agg(F.countDistinct("doc_id").alias("n_docs"))
     shared = counts.filter(
-        (F.col("n_docs") >= 2) & (F.col("n_docs") <= hot_cap)
+        (F.col("n_docs") >= 2) & ~is_hot(hot_cap)
     ).select("fp").persist()
     if persist_registry is not None:
         persist_registry.append(shared)
-    gate = (
-        F.broadcast(shared)
-        if shared.count() <= _GATE_BROADCAST_MAX_FPS else shared
-    )
-    return fps.join(gate, "fp")
+    return size_gated_broadcast(shared)
 
 
 def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
@@ -386,11 +370,10 @@ def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
 
     `indexed`: the fingerprints of an existing index (the streaming sink's
     persistent fp table). `fps` then holds only the NEW docs' fingerprints:
-    the gate and the join run over indexed ∪ new, and only pairs with at
-    least one new side are kept — new x indexed plus new x new, never
-    indexed x indexed, whose pairs an earlier call already emitted. The
-    new-side flag rides the exploded rows from union time, so no extra
-    join marks sides. With no index this is the batch self-join.
+    the shared-fp gate is counted over indexed ∪ new and applied to both
+    sides, and the join is bucket_pairs' probe form — new x new plus
+    new x indexed, never indexed x indexed, whose pairs an earlier call
+    already emitted. With no index this is the batch self-join.
 
     Shape note (measured on the 24.5M-fp bench corpus, local[4]): this
     countDistinct + codegen self-join formulation beat both a
@@ -399,21 +382,13 @@ def overlap_candidates(fps: DataFrame, hot_cap: int = 200,
     collect_list-per-fp + higher-order-function pair-explosion variant
     (5x slower: interpreted lambda expressions + object aggregation lose
     badly to whole-stage-codegen joins). Don't "simplify" it back."""
-    flag: list[str] = []
-    if indexed is not None:
-        cols = ["doc_id", "fp", "pos"]
-        fps = indexed.select(*cols).withColumn("is_new", F.lit(False)) \
-            .unionByName(fps.select(*cols).withColumn("is_new", F.lit(True)))
-        flag = ["is_new"]
-    cold = _shared_fp_gate(fps, hot_cap, persist_registry)
-    a = cold.select("fp", F.col("doc_id").alias("id_a"), F.col("pos").alias("pos_a"),
-                    *[F.col(c).alias("new_a") for c in flag])
-    b = cold.select("fp", F.col("doc_id").alias("id_b"), F.col("pos").alias("pos_b"),
-                    *[F.col(c).alias("new_b") for c in flag])
-    joined = a.join(b, "fp").filter(F.col("id_a") < F.col("id_b"))
-    if flag:
-        joined = joined.filter(F.col("new_a") | F.col("new_b"))
-    out = _pair_seed_agg(joined)
+    counted = fps if indexed is None else (
+        indexed.select("doc_id", "fp").unionByName(fps.select("doc_id", "fp")))
+    gate = _shared_fp_gate(counted, hot_cap, persist_registry)
+    out = _pair_seed_agg(bucket_pairs(
+        fps.join(gate, "fp"), key=["fp"], carry=["pos"],
+        indexed=None if indexed is None else indexed.join(gate, "fp"),
+    ))
     if min_shared_fps > 1:
         out = out.filter(F.col("n_shared_fps") >= min_shared_fps)
     return out

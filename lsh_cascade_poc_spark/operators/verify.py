@@ -46,8 +46,6 @@ def verify_pairs_exact_jaccard(
     signatures: DataFrame,
     threshold: float,
     estimate_margin: float | None = 0.1,
-    shingles_col: str = "shingles",
-    minhash_col: str = "minhash",
     shingle_provider=None,
 ) -> DataFrame:
     """-> dup_pairs(id_a, id_b, jaccard), verified in three widening joins so
@@ -82,7 +80,7 @@ def verify_pairs_exact_jaccard(
         )
     else:
         sizes = signatures.select(
-            F.col("doc_id"), F.size(shingles_col).alias("n_sh")
+            F.col("doc_id"), F.size("shingles").alias("n_sh")
         )
     p = (
         pairs.join(sizes.withColumnsRenamed({"doc_id": "id_a", "n_sh": "n_a"}), "id_a")
@@ -95,10 +93,10 @@ def verify_pairs_exact_jaccard(
     )
 
     if estimate_margin is not None:
-        mh = signatures.select("doc_id", minhash_col)
+        mh = signatures.select("doc_id", "minhash")
         p = (
-            p.join(mh.withColumnsRenamed({"doc_id": "id_a", minhash_col: "mh_a"}), "id_a")
-            .join(mh.withColumnsRenamed({"doc_id": "id_b", minhash_col: "mh_b"}), "id_b")
+            p.join(mh.withColumnsRenamed({"doc_id": "id_a", "minhash": "mh_a"}), "id_a")
+            .join(mh.withColumnsRenamed({"doc_id": "id_b", "minhash": "mh_b"}), "id_b")
             .filter(
                 jaccard_estimate_from_signatures(F.col("mh_a"), F.col("mh_b"))
                 >= F.lit(threshold - estimate_margin)
@@ -114,11 +112,9 @@ def verify_pairs_exact_jaccard(
         )
         shingle_src = shingle_provider(ids)
     else:
-        shingle_src = signatures.select("doc_id", shingles_col)
-    sided = attach_pair_sides(p, shingle_src, [shingles_col])
-    jac = jaccard_on_shingle_arrays(
-        F.col(f"{shingles_col}_a"), F.col(f"{shingles_col}_b")
-    )
+        shingle_src = signatures.select("doc_id", "shingles")
+    sided = attach_pair_sides(p, shingle_src, ["shingles"])
+    jac = jaccard_on_shingle_arrays(F.col("shingles_a"), F.col("shingles_b"))
     return (
         sided.withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)

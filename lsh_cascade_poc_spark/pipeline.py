@@ -34,12 +34,13 @@ from pyspark.sql import functions as F
 from .checkpoint import StageStore
 from .config import DedupConfig
 from .functions.signature_udf import make_signature_udf
-from .functions.simhash import hamming64, simhash_band_key
+from .functions.simhash import hamming64
 from .functions.text import fingerprint_md5
 from .operators.assemble import assemble_conversations, with_doc_id
-from .operators.bands import explode_bands, pairable_bands
+from .operators.bands import explode_bands, explode_simhash_bands, pairable_bands
 from .operators.components import clusters_with_singletons, connected_components
 from .operators.pairs import (
+    bucket_pairs,
     pairs_from_bands,
     pairs_with_min_match,
     split_exact_duplicates,
@@ -108,19 +109,23 @@ def minhash_candidate_pairs(
     can unpersist them once downstream stages are materialized (leaked
     persists accumulate block-manager memory across repeated runs — measured
     as a 7x warm-run slowdown on this VM's ballooned memory)."""
-    # tier 0: coarse, whole corpus. pairable_bands (not cap_hot_bands):
-    # every consumer below is a pair self-join, so singleton buckets are
-    # dead weight — gating them out shrank this stage ~3x (bands.py
-    # measurement note)
+    # tier 0: coarse, whole corpus. pairable_bands: every consumer below
+    # is a pair self-join, so singleton buckets are dead weight — gating
+    # them out shrank this stage ~3x (bands.py measurement note)
     coarse = explode_bands(
         signatures, "minhash", tier=0,
         n_bands=cfg.coarse_n_bands, rows_per_band=cfg.coarse_rows_per_band,
     )
     coarse_kept, hot0 = pairable_bands(coarse, cfg.hot_band_cap,
                                        persist_registry=persist_registry)
+    coarse_pairs = pairs_from_bands(coarse_kept)
+    # tight_min_match == 0 bypasses the tight tier: nothing of it is built,
+    # so no gate-count job runs and no tier-1 bucket is recorded as dropped
+    if cfg.tight_min_match <= 0:
+        return coarse_pairs, hot0
     # persisted: referenced by the survivor gate AND the final AND-join —
     # without it the band self-join recomputes once per consumer
-    coarse_pairs = pairs_from_bands(coarse_kept, cfg.pair_repartition).persist()
+    coarse_pairs = coarse_pairs.persist()
     if persist_registry is not None:
         persist_registry.append(coarse_pairs)
 
@@ -139,14 +144,9 @@ def minhash_candidate_pairs(
     )
 
     # a candidate must be generated by the coarse tier AND confirmed by the
-    # tight tier (the cascade's AND-tightening); when tight_min_match == 0 the
-    # tight tier is bypassed.
-    if cfg.tight_min_match > 0:
-        cand = coarse_pairs.join(tight_pairs, ["id_a", "id_b"], "inner")
-    else:
-        cand = coarse_pairs
-    hot = hot0.unionByName(hot1)
-    return cand, hot
+    # tight tier (the cascade's AND-tightening)
+    cand = coarse_pairs.join(tight_pairs, ["id_a", "id_b"], "inner")
+    return cand, hot0.unionByName(hot1)
 
 
 def simhash_candidate_pairs(
@@ -156,27 +156,16 @@ def simhash_candidate_pairs(
     """SimHash bit-sampling pass: 16-bit chunk band join (chunk_hash analog)
     + Hamming <= tau prune (the reference's Stage-2 rerank as a filter).
     Returns (pairs, hot-band stats) like minhash_candidate_pairs."""
-    n_bands = cfg.simhash_bits // cfg.simhash_band_bits
-    banded = signatures.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[
-                simhash_band_key(F.col("simhash"), i, cfg.simhash_band_bits)
-                for i in range(n_bands)
-            ])
-        ).alias("band_id", "band_key"),
+    banded = explode_simhash_bands(
+        signatures, cfg.simhash_bits // cfg.simhash_band_bits,
+        cfg.simhash_band_bits,
     ).withColumn("tier", F.lit(2))
     kept, hot = pairable_bands(banded, cfg.hot_band_cap,
                                persist_registry=persist_registry)
-    a = kept.select("tier", "band_id", "band_key",
-                    F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"))
-    b = kept.select("tier", "band_id", "band_key",
-                    F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"))
     pairs = (
-        a.join(b, ["tier", "band_id", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(hamming64(F.col("sim_a"), F.col("sim_b")) <= cfg.simhash_hamming_tau)
+        bucket_pairs(kept, carry=["simhash"])
+        .filter(hamming64(F.col("simhash_a"), F.col("simhash_b"))
+                <= cfg.simhash_hamming_tau)
         .select("id_a", "id_b")
         .distinct()
     )

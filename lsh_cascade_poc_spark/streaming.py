@@ -259,8 +259,8 @@ class IncrementalDedup:
             )
             # a conversation re-delivered in a later batch (at-least-once
             # source) matches its OWN fp_index row — same guard as the
-            # band-probe join below, else a degenerate self-pair lands in
-            # dup_pairs
+            # band-probe join below (bucket_pairs), else a degenerate
+            # self-pair lands in dup_pairs
             .filter(F.col("id_a") != F.col("id_b"))
         )
         fresh_reps_docs = reps_docs.join(
@@ -286,18 +286,7 @@ class IncrementalDedup:
         kept_new = drop_hot(new_bands, hot).localCheckpoint(eager=True)
         kept_idx = drop_hot(idx_bands, hot)
         # probe: new docs vs existing index, plus the new-vs-new self-join
-        hits_old = (
-            kept_new.select(*BUCKET, F.col("doc_id").alias("id_new"))
-            .join(kept_idx.select(*BUCKET, F.col("doc_id").alias("id_old")),
-                  BUCKET)
-            .select(
-                F.least("id_new", "id_old").alias("id_a"),
-                F.greatest("id_new", "id_old").alias("id_b"),
-            )
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
-        cands = hits_old.unionByName(pairs_from_bands(kept_new)).distinct()
+        cands = pairs_from_bands(kept_new, indexed=kept_idx)
 
         # long-overlap stage, incremental (batch analog: pipeline.py
         # overlap_pairs): fresh reps' winnow fingerprints probe the
@@ -374,18 +363,16 @@ class IncrementalDedup:
 
     # -- convenience wiring -------------------------------------------------
 
-    def start(self, source_dir: str, checkpoint_dir: str,
-              trigger_once: bool = True):
-        stream = (
+    def start(self, source_dir: str, checkpoint_dir: str):
+        """Process every file under `source_dir` not yet committed to
+        `checkpoint_dir`, then stop (availableNow trigger)."""
+        return (
             self.spark.readStream.schema(TURNS_DDL).parquet(source_dir)
-        )
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
+            .writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def dup_pairs(self) -> DataFrame:
         return self._read_table("dup_pairs")

@@ -5,12 +5,13 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from lsh_cascade_poc_spark.operators.bands import cap_hot_bands, explode_bands
+from lsh_cascade_poc_spark.operators.bands import explode_bands, pairable_bands
 from lsh_cascade_poc_spark.operators.pairs import (
-    collapse_exact_duplicates,
     pairs_from_bands,
     pairs_with_min_match,
+    split_exact_duplicates,
     survivors,
+    tag_exact_duplicates,
 )
 
 
@@ -66,11 +67,11 @@ def test_hot_band_cap_drops_and_records(spark):
     sig = [1, 2, 3, 4]
     df = _sig_df(spark, {i: sig for i in range(10)})
     bands = explode_bands(df, "minhash", tier=0, n_bands=1, rows_per_band=4)
-    kept, hot = cap_hot_bands(bands, cap=5)
+    kept, hot = pairable_bands(bands, cap=5)
     assert kept.count() == 0
     hrows = hot.collect()
     assert len(hrows) == 1 and hrows[0].n_docs == 10
-    kept2, hot2 = cap_hot_bands(bands, cap=100)
+    kept2, hot2 = pairable_bands(bands, cap=100)
     assert kept2.count() == 10 and hot2.count() == 0
 
 
@@ -83,8 +84,47 @@ def test_survivors_and_exact_pairs(spark):
         [(1, "x"), (2, "x"), (3, "x"), (4, "y"), (5, "z")],
         "doc_id long, fingerprint string",
     )
-    reps, star = collapse_exact_duplicates(docs)
+    reps, star = split_exact_duplicates(tag_exact_duplicates(docs))
     ep = sorted((r.id_a, r.id_b) for r in star.collect())
     # star topology: every member pairs with the group min
     assert ep == [(1, 2), (1, 3)]
     assert sorted(r.doc_id for r in reps.collect()) == [1, 4, 5]
+
+
+def test_band_probe_partitions_self_join(spark):
+    """Probing a band index is the self-join split in two: the pairs of the
+    whole band table are exactly the indexed part's own pairs plus the new
+    part probing the indexed part (new x indexed and new x new), and a doc
+    re-delivered on the new side never pairs with its own indexed copy."""
+    import random
+
+    rng = random.Random(20261017)
+    # 4 bands of 4 lanes, each band one of 3 patterns: buckets of ~8 docs,
+    # so every bucket straddles the split
+    sigs = {
+        doc_id: [c for _ in range(4) for c in [rng.randrange(3)] * 4]
+        for doc_id in range(24)
+    }
+    bands = explode_bands(_sig_df(spark, sigs), "minhash", tier=0,
+                          n_bands=4, rows_per_band=4).localCheckpoint(eager=True)
+    indexed = bands.filter("doc_id % 2 = 0")
+    new = bands.filter("doc_id % 2 = 1")
+
+    def pairs(*args, **kw):
+        return {tuple(r) for r in pairs_from_bands(*args, **kw).collect()}
+
+    whole = pairs(bands)
+    split = pairs(indexed)
+    probed = pairs(new, indexed=indexed)
+    assert split and probed, "both halves must contribute"
+    assert not split & probed
+    assert whole == split | probed
+    # the probe emits only pairs with at least one new (odd) side
+    assert all(a % 2 or b % 2 for a, b in probed)
+
+    # doc 0 is indexed AND re-delivered: it pairs with every doc it shares
+    # a bucket with, never with itself
+    redelivered = pairs(new.unionByName(indexed.filter("doc_id = 0")),
+                        indexed=indexed)
+    assert all(a != b for a, b in redelivered)
+    assert redelivered == probed | {p for p in whole if 0 in p}

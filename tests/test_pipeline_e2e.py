@@ -231,6 +231,31 @@ def test_empty_and_all_filtered_corpus(spark, tmp_path):
     assert res.clusters.count() == 0
 
 
+def test_bypassed_tight_tier_records_no_drops(spark, tiny_turns, tmp_path):
+    """tight_min_match=0 bypasses tier 1 entirely: none of it is built, so
+    none of its buckets is recorded as a hot-band drop — even where a
+    tier-1 bucket holds more than hot_band_cap docs (one-lane tight bands
+    make far bigger buckets than the 8-lane coarse ones)."""
+    from dataclasses import replace
+
+    from lsh_cascade_poc_spark.checkpoint import StageStore
+    from lsh_cascade_poc_spark.pipeline import minhash_candidate_pairs, release
+
+    cfg = DedupConfig(n_perm=64, coarse_n_bands=8, coarse_rows_per_band=8,
+                      tight_n_bands=16, tight_rows_per_band=1,
+                      tight_min_match=0, hot_band_cap=3, cc_max_iterations=6)
+    store = StageStore(spark=spark, work_dir=str(tmp_path), config_hash="bypass")
+    res = run_dedup(spark, tiny_turns, cfg=cfg, store=store,
+                    enable_overlap_stage=False)
+    # precondition: with the tier switched on, a tier-1 bucket is over the cap
+    persists: list = []
+    _, hot = minhash_candidate_pairs(
+        res.signatures, replace(cfg, tight_min_match=1), persists)
+    assert hot.filter("tier = 1").count() > 0
+    release(persists)
+    assert store.load("hot_band_drops").filter("tier = 1").count() == 0
+
+
 def test_recall_report_module(spark_result):
     """recall.py — the module bench.py publishes as the north-rule clause-1
     metric (`dup_pair_recall`) — must read 1.0 contract recall on the tiny

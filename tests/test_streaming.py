@@ -28,12 +28,12 @@ def test_incremental_matches_batchwise(spark, tmp_path):
         .coalesce(1).write.mode("overwrite").parquet(src + "/b1")
 
     inc = IncrementalDedup(spark, str(tmp_path / "index"), CFG)
-    q = inc.start(src + "/b*", str(tmp_path / "ckpt"), trigger_once=True)
+    q = inc.start(src + "/b*", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     spark.createDataFrame(turns[~turns.conv_id.isin(half)], TURNS_DDL) \
         .coalesce(1).write.mode("overwrite").parquet(src + "/b2")
-    q2 = inc.start(src + "/b*", str(tmp_path / "ckpt"), trigger_once=True)
+    q2 = inc.start(src + "/b*", str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
 
     got_docs = inc.docs()
@@ -230,12 +230,12 @@ def test_redelivered_conversation_no_self_pair(spark, tmp_path):
     df.coalesce(1).write.mode("overwrite").parquet(src + "/b1")
 
     inc = IncrementalDedup(spark, str(tmp_path / "index"), CFG)
-    q = inc.start(src + "/b*", str(tmp_path / "ckpt"), trigger_once=True)
+    q = inc.start(src + "/b*", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     # the SAME conversations delivered again as a fresh file
     df.coalesce(1).write.mode("overwrite").parquet(src + "/b2")
-    q2 = inc.start(src + "/b*", str(tmp_path / "ckpt"), trigger_once=True)
+    q2 = inc.start(src + "/b*", str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
 
     pairs = inc.dup_pairs()
